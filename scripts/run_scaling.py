@@ -54,14 +54,10 @@ def main() -> None:
 
     jobs = [
         ("flagship geotag→PIP→tiles (fused Python path)", "flagship_tiles_sec"),
-        ("flagship geotag→PIP→tiles (native zero-Python path)", "flagship_native_sec"),
-        ("flagship native, cell-prefiltered dim (round-5 default)", "flagship_native_prefilter_sec"),
+        ("flagship native, auto-prefiltered dim (gate carrier)", "flagship_native_prefilter_sec"),
         ("full image decode + stats", "decode_stats_sec"),
         ("lineitem group-agg (sf0.1)", "lineitem_agg_sec"),
-        ("native PIP, 3000 polygons, one-row dim (100k pts)", "pip3000_native_sec"),
         ("native PIP, 3000 polygons, cell-prefiltered (20M pts)", "pip3000_prefilter_sec"),
-        ("broadcast-join copy probe (same join, no PIP math)", "pip3000_copy_probe_sec"),
-        ("prefiltered PIP kernel (prefiltered minus copy probe)", "pip3000_kernel_sec"),
         ("distance-band range join (20M pts x 500 places, km=1000)", "wd_range_sec"),
         ("big-big salted shuffle range join (20M x 2M pts, km=10)", "wd_shuffle_sec"),
         ("shuffle-transport probe (same exchange, no join/compute)", "wd_shuffle_transport_probe_sec"),
@@ -112,10 +108,9 @@ def main() -> None:
         f"| throughput | local[{LEVELS[0]}] | local[{LEVELS[1]}] |",
         "|---|---|---|",
         f"| flagship (fused) rows/sec | {lo['flagship_rows_per_sec']} | {hi['flagship_rows_per_sec']} |",
-        f"| flagship (native) rows/sec | {lo['flagship_native_rows_per_sec']} | {hi['flagship_native_rows_per_sec']} |",
+        f"| flagship (native) rows/sec | {lo['flagship_native_prefilter_rows_per_sec']} | {hi['flagship_native_prefilter_rows_per_sec']} |",
         f"| decode rows/sec | {lo['decode_rows_per_sec']} | {hi['decode_rows_per_sec']} |",
         f"| channel probe rows/sec | {lo['channel_probe_rows_per_sec']} | {hi['channel_probe_rows_per_sec']} |",
-        f"| PIP 3000-poly one-row-dim pts/sec | {lo['pip3000_native_rows_per_sec']} | {hi['pip3000_native_rows_per_sec']} |",
         f"| PIP 3000-poly prefiltered pts/sec | {lo['pip3000_prefilter_rows_per_sec']} | {hi['pip3000_prefilter_rows_per_sec']} |",
         *(
             [f"| range-join probe pts/sec | {lo['wd_range_rows_per_sec']} | {hi['wd_range_rows_per_sec']} |"]
@@ -238,34 +233,18 @@ def main() -> None:
             if "mega_clip_sec" in lo else []
         ),
         "At 3000 polygons (10x the 300-polygon pytest pin) the cell-prefiltered",
-        "native dim is the designated configuration: on the SAME 100k-point",
-        f"workload it takes {hi['pip3000_prefilter_same_sec']}s vs {hi['pip3000_native_sec']}s",
-        f"for the one-row dim at local[{LEVELS[1]}] (per-point work drops from",
-        "O(all polygons) to O(cell candidates)); its scaling row above is",
-        "measured at 200x the points so it stays compute-bound.",
-        "",
-        "The copy-probe row runs the IDENTICAL cell→candidates broadcast",
-        "equi-join with the PIP math replaced by size(polys): in local mode",
-        "every thread probes ONE shared hashed relation and copies candidate",
-        "arrays through ONE socket's memory system, so that term is",
-        "bandwidth-bound at any core count — the broadcast-join analogue of",
-        "the Arrow-channel probe. On a real cluster each executor holds its",
-        "own broadcast copy on its own memory bus. `prefiltered minus probe`",
-        "therefore isolates the PIP kernel compute the 0.8 gate is about",
-        f"(this run: {(lo['pip3000_kernel_sec'] / hi['pip3000_kernel_sec'] / ratio):.2f};",
-        "round-over-round samples for this row live in the variance",
-        "paragraph below — it is a ~7 s local[16] job and moves with",
-        "page-cache state more than the longer rows do).",
+        "native dim folds only each point's cell candidates; its scaling row",
+        "is measured at 20M points so it stays compute-bound.",
         "",
         "The distance-band range-join row is round 2's perf-weak operator",
         "rebuilt in round 3 as a compiled zero-shuffle narrow pipeline",
         "(ring exploded on the smaller side, pairs unique by construction,",
-        "no Janino fallback). Its efficiency lands ON the copy-probe",
-        "artifact signature (compare the two rows): the per-candidate",
-        "arithmetic is a ~30-flop haversine, so after the rebuild the",
-        "operator is pure broadcast-probe row streaming — the local-mode",
-        "shared-socket term the probe isolates — with effectively zero",
-        "kernel overhead of its own. On a real cluster each executor owns",
+        "no Janino fallback). The per-candidate arithmetic is a ~30-flop",
+        "haversine, so after the rebuild the operator is pure",
+        "broadcast-probe row streaming — a local-mode shared-socket term",
+        "(every thread probes ONE hashed relation through ONE socket's",
+        "memory system) — with effectively zero kernel overhead of its",
+        "own. On a real cluster each executor owns",
         "its broadcast copy and memory bus, and the operator's narrow",
         "zero-shuffle shape is exactly what scales there.",
         "",
@@ -280,7 +259,7 @@ def main() -> None:
         "shuffle-transport probe (the identical exchange of the 20M side",
         "with the join and all pair compute removed) pins that floor at",
         "~0.4 efficiency at ANY core count — the shuffle analogue of the",
-        "broadcast copy probe. The operator's own row lands between that",
+        "Arrow-channel probe. The operator's own row lands between that",
         "transport floor and the compute rows' ~0.85 according to its",
         "shuffle share. On a real cluster the shuffle fabric (disks + NICs)",
         "scales WITH executor count — exactly the term local mode cannot",
@@ -295,7 +274,8 @@ def main() -> None:
         "pip3000-prefilter leg ran 2x slower than the same job at 4 cores",
         "in round 4; both samples are recorded here), and two in round 6,",
         "the flagship native",
-        "(one-row, gate carrier per the north rule) efficiency measured",
+        "one-row configuration (the gate carrier until that dim was",
+        "deleted) measured",
         "0.876 / 1.018 / 0.885 / 0.88 / 0.905 / 0.89 / 0.82 / 0.84 / 0.74 /",
         "0.83 / 0.89 / 0.99 / 0.85 / 0.76 (≥ the 0.8 gate in 12 of 14; the",
         "0.74 and 0.76 samples came from degraded local[16] legs whose",
@@ -306,16 +286,15 @@ def main() -> None:
         "0.79 / 0.92 / 0.97 / 0.86 / 0.84 / 0.83, lineitem agg 0.80 /",
         "0.66 / 0.81 / 0.73 / 1.08 / 0.85 / 0.77 / 1.01 / 0.78 / 0.80 /",
         "0.63 / 0.93 (the sub-second local[16] samples of a 3 s job absorb",
-        "JVM/GC noise), prefiltered-PIP kernel net of the copy probe 0.87 /",
-        "0.95 / 0.45 / 0.78 (the ~5-10 s legs are the most cache-sensitive",
-        "rows in the suite; the prefiltered dim's 100x-points absolute win",
-        "over the one-row fold is pinned in its own rows either way),",
+        "JVM/GC noise), prefiltered-PIP kernel net of a since-retired",
+        "copy probe 0.87 / 0.95 / 0.45 / 0.78 (the ~5-10 s legs are the",
+        "most cache-sensitive rows in the suite),",
         "round-5 rows: flagship prefiltered 0.83 / 1.00 / 0.84 / 0.84,",
         "streaming ingest 0.59 / 0.69, then 0.79 / 0.82 in round 6 after",
         "the 64-file / 32-per-trigger layout let every batch's scan use",
         "the cores (round-5 verdict #4 — the row now clears the 0.8 gate",
         "with the crash+resume invariant intact).",
-        "Round 7 ran two full pairs: gate carrier 0.836 then 0.998,",
+        "Round 7 ran two full pairs: one-row gate carrier 0.836 then 0.998,",
         "prefiltered flagship 0.803 then 0.983, decode 0.877 then 0.906,",
         "ingest 0.763 then 0.877, megacoast NATIVE 0.840 then 0.837 (the",
         "most stable new row). The cogroup-shuffle rows are the",
@@ -338,16 +317,13 @@ def main() -> None:
         "The flagship's `native` strategy (zero Python, zero shuffle; tests",
         "assert `Python not in plan`, and since round 2 the polygons are row",
         "data — no Janino codegen ceiling) removes the channel term entirely.",
-        "The GATE CARRIER row is the one-row-dim configuration (pure",
-        "per-point fold, continuous with the rounds-2-4 series). Since",
-        "round 5 the production default is the cell-PREFILTERED dim (its",
-        "own row above): with multipolygon boundaries the one-row fold pays",
-        "every polygon's edges per point, while the prefiltered dim folds",
-        "only cell candidates — the scale-correct plan (see the 3000-polygon",
-        "rows, where it wins ~10x outright). Its local-mode efficiency",
-        "blends the kernel with the broadcast-probe copy term the copy-probe",
-        "row isolates; on a real cluster each executor owns its broadcast",
-        "copy, so the kernel term (0.95 net of the probe) is what scales.",
+        "The GATE CARRIER row is the auto-prefiltered native flagship",
+        "(`tile_assignments(strategy=\"native\")`): auto_prefilter resolves",
+        "the flagship boundaries to the res-4 position-indexed cell dim, so",
+        "each point folds only its cell candidates. Its local-mode",
+        "efficiency blends that fold with the shared broadcast-probe copy",
+        "term (every thread probes ONE hashed relation through ONE socket);",
+        "on a real cluster each executor owns its broadcast copy.",
         "",
         "Raw JSON:",
         "```json",

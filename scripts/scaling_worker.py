@@ -88,20 +88,10 @@ def main() -> None:
     res["flagship_rows_per_sec"] = round(n4 / res["flagship_tiles_sec"], 1)
 
     # zero-Python flagship: native header parse + data-driven HOF PIP — no
-    # Arrow channel anywhere. TWO configurations measured since round 5:
-    # the ONE-ROW dim (per-point fold over every polygon edge — pure
-    # compute, the gate carrier continuous with rounds 2-4) and the
-    # cell-PREFILTERED dim (the round-5 production default: per-point work
-    # is O(cell candidates), but the plan adds a broadcast hash probe whose
-    # local-mode shared-socket copy term the pip3000 copy-probe row
-    # quantifies — read it against that probe, not the compute rows).
-    res["flagship_native_sec"] = timed(
-        lambda: spatial_join.tile_assignments(
-            images_rep, boundaries, res=9, strategy="native",
-            native_prefilter_res=None,
-        )
-    )
-    res["flagship_native_rows_per_sec"] = round(n4 / res["flagship_native_sec"], 1)
+    # Arrow channel anywhere. The auto prefilter resolves the flagship
+    # boundaries to the position-indexed cell dim, so per-point work is
+    # O(cell candidates); the plan's broadcast hash probe adds a local-mode
+    # shared-socket copy term that a real cluster splits per executor.
     res["flagship_native_prefilter_sec"] = timed(
         lambda: spatial_join.tile_assignments(images_rep, boundaries, res=9, strategy="native")
     )
@@ -143,9 +133,7 @@ def main() -> None:
     )
 
     # --- native PIP at 10x polygons (3000 x 24 edges; round-2 verdict #8):
-    # the one-row-dim fold is O(all polygons) per point, so 3000 polygons is
-    # the regime where the cell-prefiltered dim (per-cell polygon subsets,
-    # broadcast hash equi-join on the point's cell) must win outright
+    # the cell-prefiltered dim folds only each point's cell candidates
     import numpy as np
 
     rngp = np.random.default_rng(123)
@@ -175,46 +163,15 @@ def main() -> None:
         df.count()
         return df
 
-    n_unpref, n_pref = 100_000, 20_000_000
-    res["pip3000_points_unpref"] = n_unpref
+    n_pref = 20_000_000
     res["pip3000_points_pref"] = n_pref
-    pts_unpref = _pts(n_unpref)
     pts_pref = _pts(n_pref)
-    res["pip3000_native_sec"] = timed(
-        lambda: _sj.broadcast_pip_join_native(pts_unpref, polys)
-    )
-    # same workload, prefiltered: the absolute-time comparison
-    res["pip3000_prefilter_same_sec"] = timed(
-        lambda: _sj.broadcast_pip_join_native(pts_unpref, polys, cell_prefilter_res=2)
-    )
-    # 200x the points, prefiltered: the scaling-efficiency row — at 2M points
-    # the job finished in <2s and measured scheduling overhead, not compute
+    # 20M points keep the job compute-bound: at 2M points it finished in
+    # <2s and measured scheduling overhead, not compute
     res["pip3000_prefilter_sec"] = timed(
         lambda: _sj.broadcast_pip_join_native(pts_pref, polys, cell_prefilter_res=2)
     )
-    res["pip3000_native_rows_per_sec"] = round(n_unpref / res["pip3000_native_sec"], 1)
     res["pip3000_prefilter_rows_per_sec"] = round(n_pref / res["pip3000_prefilter_sec"], 1)
-
-    # copy probe: the identical cell->candidates broadcast equi-join with
-    # the PIP math removed (reads only size(polys)). In local mode every
-    # thread probes ONE shared hashed relation and copies the candidate
-    # array through ONE socket's memory system, so this term scales
-    # sub-linearly at any core count — the broadcast-join analogue of the
-    # Arrow-channel probe. prefiltered-minus-probe isolates the kernel
-    # compute the 0.8 gate is about; on a real cluster each executor holds
-    # its own copy of the broadcast and its own memory bus.
-    from wikibrain_spark.geo import cells as _cells
-
-    cell_dim = _sj.candidate_cell_dim(polys, 2)
-    probe = (
-        pts_pref.withColumn("cell", _cells.hexlite_cell_col(F.col("lat"), F.col("lon"), 2))
-        .join(F.broadcast(cell_dim), "cell", "left")
-        .select(F.size("polys").alias("k"))
-    )
-    res["pip3000_copy_probe_sec"] = timed(lambda: probe)
-    res["pip3000_kernel_sec"] = round(
-        max(res["pip3000_prefilter_sec"] - res["pip3000_copy_probe_sec"], 0.001), 3
-    )
 
     # distance-band range join (round-2 perf-weak, rebuilt round 3 as a
     # compiled zero-shuffle narrow pipeline): 20M probe points against 100
@@ -225,7 +182,7 @@ def main() -> None:
     # 500 places -> ~15 exact haversine verifies per probe point, which
     # keeps the job compute-bound: at 100 places the per-point work was so
     # light that the row measured the local-mode shared-socket broadcast
-    # probe (the copy-probe artifact), not the operator kernel
+    # probe, not the operator kernel
     places = spark.createDataFrame(
         [(int(i), float((i * 131) % 160 - 80), float((i * 173) % 350 - 175))
          for i in range(500)],
@@ -261,7 +218,7 @@ def main() -> None:
     # all pair compute removed. In local mode every shuffle write+read
     # crosses ONE socket's memory system and page cache, so this term is
     # bandwidth-bound at any core count — the shuffle analogue of the
-    # broadcast copy probe; wd_shuffle minus transport isolates the join
+    # Arrow-channel probe; wd_shuffle minus transport isolates the join
     # kernel. On a real cluster each executor shuffles over its own disks
     # and NICs.
     wd_res = _knn._range_res(10.0, None)

@@ -99,10 +99,11 @@ def test_native_pip_survives_large_polygon_set(spark):
 
 
 def test_native_pip_cell_prefilter_matches_default(spark):
-    """The cell-prefiltered native variant (scale configuration) must return
-    exactly the same pairs as the one-row-dim variant."""
+    """A fixed cell-prefilter resolution and the "auto" default must both
+    return exactly the NumPy kernel's pairs."""
     import numpy as np
     import pandas as pd
+    from wikibrain_spark.geo import pip as pip_mod
 
     rng = np.random.default_rng(11)
     polys = []
@@ -115,13 +116,17 @@ def test_native_pip_cell_prefilter_matches_default(spark):
         polys, "boundary_id long, ring_lat array<double>, ring_lon array<double>"
     )
     n_pts = 1500
+    plat, plon = rng.uniform(-65, 65, n_pts), rng.uniform(-155, 155, n_pts)
     points = spark.createDataFrame(pd.DataFrame({
-        "image_id": [str(i) for i in range(n_pts)],
-        "lat": rng.uniform(-65, 65, n_pts), "lon": rng.uniform(-155, 155, n_pts),
+        "image_id": [str(i) for i in range(n_pts)], "lat": plat, "lon": plon,
     }))
+    want = set()
+    for bid, rlat, rlon in polys:
+        inside = pip_mod.points_in_ring(plat, plon, np.asarray(rlat), np.asarray(rlon))
+        want |= {(str(i), bid) for i in np.nonzero(inside)[0]}
     base = {(r["image_id"], r["boundary_id"])
             for r in spatial_join.broadcast_pip_join_native(points, boundaries).collect()}
     pre = {(r["image_id"], r["boundary_id"])
            for r in spatial_join.broadcast_pip_join_native(
                points, boundaries, cell_prefilter_res=3).collect()}
-    assert base and pre == base
+    assert want and base == want and pre == want

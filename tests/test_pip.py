@@ -157,8 +157,9 @@ def test_auto_index_res_max_gate_on_skewed_mix():
 def test_dateline_sliver_seam_parity(spark):
     """A wrapped ring whose unwrapped lon_max lands just past +180 (in the
     grid's over-wide last cell) contains probe points that encode to
-    lon_idx 0. The bucketed PolygonIndex, the native cover, and the
-    one-row fold must all keep them (round-5 ADVICE seam fix)."""
+    lon_idx 0. The bucketed PolygonIndex, both native dims and the shuffle
+    refine must all keep them (round-5 ADVICE seam fix), as the NumPy
+    kernel does."""
     import pandas as pd
     from wikibrain_spark.operators import spatial_join
 
@@ -179,8 +180,9 @@ def test_dateline_sliver_seam_parity(spark):
     pdf = spark.createDataFrame(pd.DataFrame(
         {"image_id": ["a", "b", "c"], "lat": lat, "lon": lon}))
     for fn in (
-        lambda: spatial_join.broadcast_pip_join_native(pdf, bdf),
         lambda: spatial_join.broadcast_pip_join_native(pdf, bdf, cell_prefilter_res=3),
+        lambda: spatial_join.broadcast_pip_join_native(
+            pdf, bdf, cell_prefilter_res=3, clip_dim=True),
         lambda: spatial_join.broadcast_pip_join(pdf, bdf, index_res=3),
         lambda: spatial_join.shuffle_pip_join(pdf, bdf, res=3),
     ):

@@ -183,7 +183,7 @@ def test_shuffle_clip_cover_auto_matches_prefilter_decision(spark):
     low = _tiny_boundary(spark, -20.0)
     res_low = spatial_join._auto_cover_res(low)
     _, rep_low = spatial_join._replication_estimates(low, res_low)
-    assert rep_low <= 2_000_000.0  # auto -> unclipped
+    assert rep_low <= spatial_join.REPLICATED_EDGE_LIMIT  # auto -> unclipped
     _, clip_low = spatial_join.auto_prefilter(low)
     assert not clip_low
 
@@ -196,7 +196,7 @@ def test_shuffle_clip_cover_auto_matches_prefilter_decision(spark):
     )
     res_c = spatial_join._auto_cover_res(cdf)
     cover_c, rep_c = spatial_join._replication_estimates(cdf, res_c)
-    assert rep_c > 2_000_000.0  # auto -> clipped
+    assert rep_c > spatial_join.REPLICATED_EDGE_LIMIT  # auto -> clipped
     _, clip_c = spatial_join.auto_prefilter(cdf)
     assert clip_c
     assert cover_c > 0.0
@@ -237,11 +237,11 @@ def test_pole_closure_perimeter_convention_pinned(spark):
 
 
 def test_flagship_auto_prefilter_plan_identity(spark, tmp_path):
-    """Round-6 verdict item 5: tile_assignments defaults to
-    native_prefilter_res="auto". The gate-carrier bench row stays
+    """Round-6 verdict item 5: the native flagship prefilters with
+    cell_prefilter_res="auto". The gate-carrier bench row stays
     measurable only if the auto decision on the flagship fixture is
-    STABLE — pin it, and pin that the auto default stays row-identical
-    to the previously-pinned fixed res on the e2e fixture."""
+    STABLE — pin it, and pin that the auto plan's rows equal the NumPy
+    kernel oracle (synthetic.expected_tiles) on the e2e fixture."""
     paths = synthetic.materialize(str(tmp_path / "wbs"), 200)
     images = spark.read.parquet(paths["images"])
     bdf = spark.read.parquet(paths["boundaries"])
@@ -249,15 +249,14 @@ def test_flagship_auto_prefilter_plan_identity(spark, tmp_path):
         "flagship fixture auto decision drifted — the bench gate-carrier "
         "plan changed; re-adjudicate BENCH/NOTES before accepting"
     )
-    auto_rows = spatial_join.tile_assignments(
-        images, bdf, res=9, strategy="native"
-    ).collect()
-    fixed_rows = spatial_join.tile_assignments(
-        images, bdf, res=9, strategy="native", native_prefilter_res=3
-    ).collect()
-    key = lambda r: (r["image_id"], r["boundary_id"])
-    assert sorted(auto_rows, key=key) == sorted(fixed_rows, key=key)
-    assert len(auto_rows) > 0
+    cols, key = ["image_id", "cell_r9", "boundary_id", "qid"], ["image_id", "boundary_id"]
+    got = (
+        spatial_join.tile_assignments(images, bdf, res=9, strategy="native")
+        .toPandas()[cols].sort_values(key).reset_index(drop=True)
+    )
+    want = pd.read_parquet(paths["expected_tiles"])[cols].sort_values(key).reset_index(drop=True)
+    pd.testing.assert_frame_equal(got, want, check_dtype=False)
+    assert len(got) > 0
 
 
 def test_megacoast_fixture_invariants():

@@ -158,7 +158,8 @@ def test_all_strategies_match_numpy_oracle_on_complex_fixture(spark):
 
     strategies = {
         "broadcast": lambda: spatial_join.broadcast_pip_join(pdf, bdf),
-        "native": lambda: spatial_join.broadcast_pip_join_native(pdf, bdf),
+        # "auto" resolves this fixture to the position dim at res 2
+        "native_auto": lambda: spatial_join.broadcast_pip_join_native(pdf, bdf),
         "native_prefilter": lambda: spatial_join.broadcast_pip_join_native(
             pdf, bdf, cell_prefilter_res=3),
         # clipped dim: per-cell LOCAL geometry through the same native
@@ -228,19 +229,13 @@ def test_all_strategies_match_numpy_oracle_on_coastline_fixture(spark):
 
     strategies = {
         "broadcast": lambda: spatial_join.broadcast_pip_join(pdf, bdf),
-        "native": lambda: spatial_join.broadcast_pip_join_native(pdf, bdf),
-        # the prefiltered dim replicates FULL geometry per covering cell
-        # (that is its design: candidates as row data for the native
-        # fold), so on vertex-heavy polygons its res must be coarse —
-        # res 0 keeps the dim ~13 MB where res 3 built a >1 GB broadcast
-        # (maxResultSize abort). High-vertex sets at fine res belong to
-        # the clipped shuffle strategy; this pins that the native path
-        # stays CORRECT when sized per its own rule.
+        # the unclipped position dim folds every candidate's FULL edge
+        # list per point, so on vertex-heavy polygons its res must be
+        # coarse; this pins that it stays CORRECT at res 0
         "native_prefilter": lambda: spatial_join.broadcast_pip_join_native(
             pdf, bdf, cell_prefilter_res=0),
-        # the round-6 fix for exactly that limitation: clip_dim carries
-        # only each cell's LOCAL edge subset, so the vertex-heavy set
-        # runs at res 2 with a megabyte-scale dim instead of res 0
+        # clip_dim carries only each cell's LOCAL edge subset, so the
+        # vertex-heavy set runs at res 2 — what "auto" resolves it to
         "native_prefilter_clipped": lambda: spatial_join.broadcast_pip_join_native(
             pdf, bdf, cell_prefilter_res=2, clip_dim=True),
         "shuffle_salted": lambda: spatial_join.shuffle_pip_join(
@@ -311,6 +306,5 @@ def test_all_strategies_handle_empty_boundary_dim(spark):
         lambda: spatial_join.broadcast_pip_join_native(pdf, empty, cell_prefilter_res="auto"),
         lambda: spatial_join.broadcast_pip_join_native(pdf, empty, cell_prefilter_res=2, clip_dim=True),
         lambda: spatial_join.broadcast_pip_join(pdf, empty),
-        lambda: spatial_join.broadcast_pip_join_native(pdf, empty),
     ):
         assert fn().count() == 0

@@ -36,6 +36,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 HEXLITE_MODE = 1
+HEXLITE_MAX_RES = 15  # the id header's 4-bit res field
 HEXLITE_BASE_DEG = 8.0  # res-0 cell edge in degrees
 _SQRT7 = math.sqrt(7.0)
 

@@ -61,7 +61,7 @@ def streaming_flagship_ingest(
     out_root: str,
     checkpoint_dir: str,
     res: int = 9,
-    cell_prefilter_res: int | None = 2,
+    cell_prefilter_res: int | str = 2,
     max_files_per_trigger: int = 8,
     fail_before_commit: set[int] | None = None,
 ) -> dict[str, dict]:
@@ -84,7 +84,8 @@ def streaming_flagship_ingest(
 
     The stream graph is zero-Python except the dedup state operator: the
     geotag parse is the native binary header parse, and the PIP is the
-    broadcast one-row-dim fold — both the UNCHANGED batch operators.
+    native fold over the broadcast cell dim at ``cell_prefilter_res`` —
+    both the UNCHANGED batch operators.
 
     ``fail_before_commit``: test-only fault injection — batch ids that
     raise AFTER writing their parquet but BEFORE the ledger commit,

@@ -6,26 +6,40 @@ per-ring antimeridian unwrap — see geo/pip.py's module doc for the model.
 Legacy single-ring frames (ring_lat/ring_lon arrays) are upgraded by
 normalize_rings at every operator entry point.
 
-Two physical strategies, one logical contract (SURVEY.md U4, J12-J14):
+One logical contract (SURVEY.md U4, J12-J14), these physical paths. The
+caller picks the family; inside a family the choice is made from the
+one-job boundary statistics pass (_cover_stats), never by a knob:
 
-1. broadcast_pip_join — the dimension side (boundary polygons) is small
-   enough to broadcast. We broadcast the raw ring arrays once; each Python
-   worker builds the grid-bucketed PolygonIndex a single time per partition
-   (amortized inside mapInPandas), then streams Arrow batches through it.
-   This is the STRtree-in-mapInPandas pattern from the north star.
+1. broadcast_pip_join / geotag_pip_fused (tile_assignments strategy
+   "broadcast" / "fused") — the Python grid-bucketed PolygonIndex, built
+   once per partition inside mapInPandas from broadcast ring arrays;
+   fused also parses the geotag header in the same Arrow hop. Kept
+   because fused is the fastest recorded flagship (13.4 s against 44.5 s
+   native at local[4], 25.6M rows, BENCH/BASELINE.md); its Arrow channel
+   caps local mode near 4-5M rows/s. Bucket res: _auto_index_res.
 
-2. shuffle_pip_join — polygons too big to broadcast. Polygons are exploded
-   to their covering hexlite cells; points carry their cell; the equi-join
-   on cell co-locates candidates; an exact ring test refines. Hot cells
-   (megacity polygons) are salted: the points side gets salt =
-   pmod(hash(image_id), n_salt) and the polygon side is replicated n_salt
-   times — ONLY for cells above a hotness threshold measured by a cheap
-   count pre-pass (AQE skew-join is the backstop, but it cannot split the
-   Python refine stage, so explicit salting is load-bearing at 100 TB).
+2. broadcast_pip_join_native (strategy "native", the streaming ingest) —
+   zero Python and zero shuffle on the points side: each point joins its
+   hexlite cell to a broadcast cell dim and folds even-odd parity over
+   the candidates' edges as row data. auto_prefilter picks the res and
+   one of two dims by the estimated replicated-edge count of an
+   unclipped cover (REPLICATED_EDGE_LIMIT):
+   a. at or below it, the POSITION-INDEXED dim — cells carry candidate
+      positions, polygons attach through a broadcast hash join. The
+      flagship fixture resolves here (res 4); measured 44.5 s against
+      74.0 s for the deleted one-row dim at local[4], and 1.53 s against
+      22.06 s on 100k points x 3,000 polygons at local[16].
+   b. above it, the CLIPPED dim (clipped_cell_dim) — each cell carries
+      only its local clipped edges, O(vertices + cells). The coastline
+      and megacoast snapshots resolve here; unclipped, the coastline dim
+      replicates 99.4M edge structs at res 3 against 59.8k clipped.
 
-At 100 TB the join key is (cell_r{res}); the points side arrives already
-partitioned by cell prefix from the geotag stage, so the shuffle moves
-only the exploded polygon side when bucketing is aligned.
+3. shuffle_pip_join (strategy "shuffle") — boundary sets too big to
+   broadcast. A cogroup on (cell bucket, salt) refines with the NumPy
+   kernel; hot cells are salted from a sampled point count. The cover is
+   the native unclipped one or the clip-to-cell one, again split at
+   REPLICATED_EDGE_LIMIT (clipping a 40-vertex rectangle set cost a
+   whole extra Spark job to save megabytes: the regressed round-6 row).
 """
 
 from __future__ import annotations
@@ -42,6 +56,15 @@ from pyspark.sql import functions as F
 from wikibrain_spark.geo import cells, pip
 
 COVER_RES = 4  # polygon_cover default; shuffle_pip_join auto-sizes (_auto_cover_res)
+
+# _auto_cover_res gates: mean bbox cover per outer ring, worst ring's cover
+_COVER_MAX_MEAN_CELLS = 1024.0
+_COVER_MAX_RING_CELLS = 16384.0
+# edge structs an UNCLIPPED cover would replicate (each polygon's full edge
+# list once per covering cell, _replication_estimates) above which the
+# clipped dim (auto_prefilter) and the clip-to-cell cover (shuffle_pip_join)
+# take over
+REPLICATED_EDGE_LIMIT = 2_000_000.0
 
 # canonical boundary geometry: a MULTIPOLYGON as an array of rings
 # (outer rings + holes; even-odd fill rule — see geo/pip.py module doc)
@@ -188,7 +211,7 @@ def _cover_stats(boundaries: DataFrame) -> dict:
     level (outer rings, the cover): sums/ maxima of the bbox span products
     ab and a+b, plus the outer-ring count, so any res's mean/max cover
     follows from cover(r) = ab/step^2 + (a+b)/step + 1 (linear in the
-    stats). Poly level (the unclipped dim's replication): the dim ships
+    stats). Poly level (an unclipped cover's replication): it carries
     each polygon's FULL edge list once per covering cell, so its total
     edge-struct count at res is sum_poly(edges_poly * cover_poly) =
     S_e_ab/step^2 + S_e_sum/step + S_e_n with S_e_* = sum_poly(edges *
@@ -273,7 +296,7 @@ def _replication_estimates(boundaries: DataFrame, res: int) -> tuple[float, floa
     _cover_stats sufficient statistics. The cover count is
     sum_ring((a/step+1)(b/step+1)) expanded to the linear form; the
     replication count weights each ring's cover by its edge count —
-    exactly what the unclipped dim/shuffle cover ships. Both
+    exactly what the unclipped shuffle cover ships. Both
     auto_prefilter's clip_dim flip and shuffle_pip_join's clip_cover
     flip + n_buckets sizing read THIS function, so the two strategies
     make one consistent statistics-driven decision."""
@@ -286,12 +309,10 @@ def _replication_estimates(boundaries: DataFrame, res: int) -> tuple[float, floa
     return cover_est, replicated
 
 
-def _auto_cover_res(
-    boundaries: DataFrame, max_mean_cells: float = 1024.0, max_ring_cells: float = 16384.0
-) -> int:
+def _auto_cover_res(boundaries: DataFrame) -> int:
     """_auto_index_res for the SHUFFLE strategy: analogous gates (mean
-    bbox cover <= max_mean_cells per outer ring, worst ring <=
-    max_ring_cells) but computed from a native aggregate of per-ring bbox
+    bbox cover <= _COVER_MAX_MEAN_CELLS per outer ring, worst ring <=
+    _COVER_MAX_RING_CELLS) but computed from a native aggregate of per-ring bbox
     spans — the shuffle side must never collect the polygon geometry to
     the driver (its dim can be big; that is the strategy's reason to
     exist). The cover-count formula
@@ -309,7 +330,7 @@ def _auto_cover_res(
     longer scales with the cover (see shuffle_pip_join's BOUNDED GROUP
     COUNT note), so the res cost model is (a) the clip prepass — one
     Sutherland-Hodgman strip/column pass per (ring, covered cell),
-    ~0.1 ms/cell, single task per polygon, so max_ring_cells ~= a 2 s
+    ~0.1 ms/cell, single task per polygon, so the ring gate ~= a 2 s
     worst-polygon task — and (b) cover row count (tiny rows). Finer res
     buys pruning: fewer points survive the covered-cells semi-filter and
     each cover row tests fewer points, so the gates sit as fine as the
@@ -331,41 +352,36 @@ def _auto_cover_res(
     if not s["n_outer"]:
         return 0
     heavy_edges_per_poly = 10_000.0
+    max_mean_cells = _COVER_MAX_MEAN_CELLS
     if s["s_e_n"] / s["n_outer"] > heavy_edges_per_poly:
-        max_mean_cells = 8.0 * max_mean_cells
+        max_mean_cells *= 8.0
     for res in range(7, 0, -1):
         step = cells.hexlite_step(res)
         mean_cover = (s["sum_ab"] / s["n_outer"]) / step**2 + (
             s["sum_absum"] / s["n_outer"]
         ) / step + 1.0
         max_cover = s["max_ab"] / step**2 + s["max_sum"] / step + 1.0
-        if mean_cover <= max_mean_cells and max_cover <= max_ring_cells:
+        if mean_cover <= max_mean_cells and max_cover <= _COVER_MAX_RING_CELLS:
             return res
     return 0
 
 
-def auto_prefilter(
-    boundaries: DataFrame,
-    max_mean_cells: float = 1024.0,
-    max_ring_cells: float = 16384.0,
-    max_replicated_edges: float = 2_000_000.0,
-) -> tuple[int, bool]:
+def auto_prefilter(boundaries: DataFrame) -> tuple[int, bool]:
     """Physical-strategy chooser for the broadcast native path: returns
     (cell_prefilter_res, clip_dim) from the same one-job distributed
     stats pass the shuffle strategy sizes itself with (_cover_stats) —
     the engine-side analogue of Catalyst picking a join strategy from
     size statistics. res comes from the _auto_cover_res gates; clip_dim
-    flips ON when the UNCLIPPED dim at that res would replicate more
-    than max_replicated_edges edge structs (the dim ships each polygon's
-    full edge list once per covering cell — sum_poly(edges x cover),
-    linear in the captured statistics; ~2M structs ~ a 10^2-MB broadcast,
-    past which the clipped O(vertices + cells) dim wins outright: 99.4M
-    -> 59.8k edge structs on the 12k-vertex coastline fixture at res 3).
-    Pass the result to broadcast_pip_join_native, or just pass
-    cell_prefilter_res="auto" there."""
-    res = _auto_cover_res(boundaries, max_mean_cells, max_ring_cells)
+    flips ON when an UNCLIPPED cover at that res would replicate more
+    than REPLICATED_EDGE_LIMIT edge structs (each polygon's full edge
+    list once per covering cell — sum_poly(edges x cover), linear in the
+    captured statistics), past which the clipped O(vertices + cells) dim
+    wins outright: 99.4M -> 59.8k edge structs on the 12k-vertex
+    coastline fixture at res 3. broadcast_pip_join_native calls this for
+    its default cell_prefilter_res="auto"."""
+    res = _auto_cover_res(boundaries)
     _, replicated = _replication_estimates(boundaries, res)
-    return res, replicated > max_replicated_edges
+    return res, replicated > REPLICATED_EDGE_LIMIT
 
 
 def broadcast_pip_join(points: DataFrame, boundaries: DataFrame, index_res: int | None = None) -> DataFrame:
@@ -453,46 +469,33 @@ def _staged_rings_col(rings):
 def broadcast_pip_join_native(
     points: DataFrame,
     boundaries: DataFrame,
-    cell_prefilter_res: int | str | None = None,
+    cell_prefilter_res: int | str = "auto",
     extra_cols: tuple[str, ...] = (),
     clip_dim: bool = False,
 ) -> DataFrame:
-    """Fully-JVM, fully-NARROW even-odd PIP: the (broadcast-sized) polygon
-    set is aggregated into ONE row — an array<struct<bid, bbox, edges>>
-    column — and broadcast-cross-joined onto the points; each point filters
-    that array with a bbox prefilter + crossing-parity fold (higher-order
-    functions over ROW DATA, not plan literals).
+    """Fully-JVM, fully-NARROW even-odd PIP: each point joins its hexlite
+    cell at cell_prefilter_res to a broadcast (cell -> candidates) dim — a
+    broadcast hash equi-join, zero shuffle of the points — and folds
+    crossing parity over its candidates' edges with higher-order functions
+    over ROW DATA, not plan literals (inlined edges hit Janino's 64 KB
+    method/constant-pool ceiling at a few hundred edges, round-1 verdict
+    'what's wrong #4'; as data the lambda is fixed-size at any polygon
+    cardinality). Same half-open edge rule as the NumPy kernel
+    (geo/pip.py points_in_ring). Points in cells no polygon covers drop.
 
-    Zero Python and zero shuffle of the points side. A previous formulation
-    inlined every edge as a plan literal, which hit Janino's 64 KB
-    method/constant-pool ceiling at a few hundred edges (round-1 verdict
-    'what's wrong #4'); with the polygons as data the lambda is fixed-size
-    regardless of polygon cardinality. Same half-open edge rule as the
-    NumPy kernel (geo/pip.py points_in_ring).
+    cell_prefilter_res="auto" (the default) resolves the resolution AND
+    clip_dim from auto_prefilter (one tiny agg job, memoized per boundary
+    snapshot); an int in [0, HEXLITE_MAX_RES] fixes the resolution and
+    leaves the dim to clip_dim. Anything else raises ValueError.
 
-    cell_prefilter_res: when set, the one-row dim is replaced by a
-    (cover_cell -> polygon-subset array) dim joined on each point's hexlite
-    cell — a broadcast hash equi-join, still zero shuffle of the points —
-    so each point folds only over the polygons whose bbox covers its cell.
-    This is the scale configuration for large polygon COUNTS (per-point
-    work drops from O(all polygons) to O(cell candidates)). Size it to
-    VERTEX weight too: the dim replicates each polygon's full geometry
-    once per covering cell, so its broadcast is O(cells x vertices) —
-    a 10^4-vertex continental ring wants res 0-1, or clip_dim=True.
-
-    cell_prefilter_res="auto" resolves BOTH the resolution and clip_dim
-    from the auto_prefilter statistics pass (one tiny agg job, memoized
-    per boundary snapshot) — the engine picks the physical dim strategy
-    the way Catalyst picks a join strategy from size stats.
-
-    clip_dim (with cell_prefilter_res): build the dim with clipped_cell_dim
-    — each cell carries only the geometry clipped to its window, making
-    the broadcast O(vertices + cells) and the per-point fold O(local
-    edges), so fine prefilter resolutions work at ANY vertex weight. The
-    dim build gains a once-per-snapshot Python prepass (the points side
-    stays zero-Python, zero-shuffle); keep the default when the polygon
-    set is low-vertex and the fully-native dim build matters more than
-    fold locality.
+    clip_dim=False builds the position-indexed dim: cells carry candidate
+    positions, and each candidate's struct<bid, boxes, edges> attaches by
+    a second broadcast hash join — O(cells + vertices) broadcast bytes.
+    clip_dim=True builds clipped_cell_dim: each cell carries only the
+    geometry clipped to its window, so the broadcast is O(vertices +
+    cells) and each point folds over LOCAL edges, at the price of a
+    once-per-snapshot Python prepass on the dim side (the points side
+    stays zero-Python).
 
     extra_cols: additional point-side columns carried through to the output
     (e.g. event_time on the Structured Streaming path — both plan shapes
@@ -501,7 +504,15 @@ def broadcast_pip_join_native(
     """
     if cell_prefilter_res == "auto":
         cell_prefilter_res, clip_dim = auto_prefilter(boundaries)
-    poly_structs = polygon_structs(boundaries)
+    elif (
+        isinstance(cell_prefilter_res, bool)
+        or not isinstance(cell_prefilter_res, int)
+        or not 0 <= cell_prefilter_res <= cells.HEXLITE_MAX_RES
+    ):
+        raise ValueError(
+            f"cell_prefilter_res must be an int in [0, {cells.HEXLITE_MAX_RES}] "
+            f"or the string 'auto', got {cell_prefilter_res!r}"
+        )
 
     lat, lon = F.col("lat"), F.col("lon")
     # probe lon in the unwrapped frame, used against dateline-crossing
@@ -532,70 +543,60 @@ def broadcast_pip_join_native(
         )
         return F.when(in_bbox, F.pmod(crossings, F.lit(2)) == 1).otherwise(F.lit(False))
 
-    if cell_prefilter_res is None:
-        poly_dim = poly_structs.agg(F.collect_list("p").alias("polys"))  # single row
-        pts = points.crossJoin(F.broadcast(poly_dim))
-        polys = F.col("polys")
-    elif clip_dim:
+    celled = points.withColumn(
+        "cell", cells.hexlite_cell_col(F.col("lat"), F.col("lon"), cell_prefilter_res)
+    )
+    if clip_dim:
         cell_dim = clipped_cell_dim(boundaries, cell_prefilter_res)
-        pts = points.withColumn(
-            "cell", cells.hexlite_cell_col(F.col("lat"), F.col("lon"), cell_prefilter_res)
-        ).join(F.broadcast(cell_dim), "cell", "left")
-        polys = F.col("polys")
-    else:
-        # POSITION-INDEXED unclipped dim (round 8): the old
-        # candidate_cell_dim shipped a full copy of each polygon's
-        # struct<bid, boxes, edges> once per covering cell — an
-        # O(cells x vertices) aggregate + broadcast (the polar cap at
-        # res 3 covers ~39k cells x a 77-edge struct ~ a 10^2 MB dim;
-        # measured as the whole cost of that bench row). Now the per-cell
-        # dim carries only int POSITIONS; each point explodes its cell's
-        # candidate positions and a broadcast HASH join on position
-        # attaches exactly the candidate's own struct to each narrow
-        # (point, candidate) row, where the fold evaluates as a filter
-        # BEFORE any projection copies the struct. O(cells + vertices)
-        # broadcast bytes, per-candidate work unchanged, identical rows.
-        # (A rejected intermediate carried the structs as a one-row
-        # array column resolved per point with element_at: every output
-        # row then materialized a copy of the WHOLE array — measured
-        # 70x slower than the replicated dim at 2M points. Big arrays
-        # must stay on the build side of a hash join, never become a
-        # per-row column.)
-        from pyspark.sql import Window
-
-        pos = poly_structs.withColumn(
-            "pos", F.row_number().over(Window.orderBy("boundary_id"))
-        )
-        cell_dim = (
-            polygon_cover(boundaries, cell_prefilter_res)
-            .join(pos.select("boundary_id", "pos"), "boundary_id")
-            .groupBy("cell")
-            .agg(F.array_sort(F.collect_list("pos")).alias("_poss"))
-        )
-        cand = (
-            points.withColumn(
-                "cell", cells.hexlite_cell_col(F.col("lat"), F.col("lon"), cell_prefilter_res)
-            )
-            .join(F.broadcast(cell_dim), "cell", "left")
-            # non-outer explode: points in uncovered cells (null _poss)
-            # drop here, same as the explode(null) of the other branches
-            .select(
-                "image_id", "lat", "lon", "_lon360", *extra_cols,
-                F.explode("_poss").alias("_pos"),
-            )
-            .join(F.broadcast(pos.select(F.col("pos").alias("_pos"), "p")), "_pos")
-        )
-        return cand.where(inside(F.col("p"))).select(
+        return celled.join(F.broadcast(cell_dim), "cell", "left").select(
             "image_id", "lat", "lon", *extra_cols,
-            F.col("p")["bid"].alias("boundary_id"),
+            # explode(null) yields no rows, so points whose cell has no
+            # covering polygon (left-join miss) drop out without a null guard
+            F.explode(
+                F.transform(F.filter(F.col("polys"), inside), lambda s: s["bid"])
+            ).alias("boundary_id"),
         )
-    return pts.select(
+    # POSITION-INDEXED unclipped dim (round 8): a per-cell copy of each
+    # candidate's full struct made the dim O(cells x vertices) (the polar
+    # cap at res 3: ~39k cells x a 77-edge struct ~ a 10^2 MB broadcast,
+    # the whole cost of that bench row). The cells carry int positions;
+    # each point explodes its cell's positions and a broadcast HASH join
+    # on position attaches the candidate's struct to the narrow (point,
+    # candidate) row, where the fold evaluates as a filter BEFORE any
+    # projection copies the struct. (Carrying the structs as a one-row
+    # array column resolved per point with element_at materialized the
+    # WHOLE array per output row — measured 70x slower at 2M points. Big
+    # arrays stay on the build side of a hash join.)
+    #
+    # Positions number boundary ROWS under a total order (boundary_id,
+    # then the geometry struct), so the two evaluations of the window —
+    # one per broadcast side — agree, ties being identical rows. With a
+    # duplicated boundary_id the cover join pairs each row's cells with
+    # every row of that id: a superset of candidates the exact fold
+    # filters, listed once per cell by collect_set.
+    from pyspark.sql import Window
+
+    pos = polygon_structs(boundaries).withColumn(
+        "pos", F.row_number().over(Window.orderBy("boundary_id", "p"))
+    )
+    cell_dim = (
+        polygon_cover(boundaries, cell_prefilter_res)
+        .join(pos.select("boundary_id", "pos"), "boundary_id")
+        .groupBy("cell")
+        .agg(F.array_sort(F.collect_set("pos")).alias("_poss"))
+    )
+    cand = (
+        celled.join(F.broadcast(cell_dim), "cell", "left")
+        # non-outer explode: points in uncovered cells (null _poss) drop
+        .select(
+            "image_id", "lat", "lon", "_lon360", *extra_cols,
+            F.explode("_poss").alias("_pos"),
+        )
+        .join(F.broadcast(pos.select(F.col("pos").alias("_pos"), "p")), "_pos")
+    )
+    return cand.where(inside(F.col("p"))).select(
         "image_id", "lat", "lon", *extra_cols,
-        # explode(null) yields no rows, so points whose cell has no covering
-        # polygon (left-join miss) drop out without a null guard
-        F.explode(
-            F.transform(F.filter(F.col("polys"), inside), lambda s: s["bid"])
-        ).alias("boundary_id"),
+        F.col("p")["bid"].alias("boundary_id"),
     )
 
 
@@ -927,29 +928,17 @@ def simplify_rings(boundaries: DataFrame, tolerance_deg: float) -> DataFrame:
     )
 
 
-def candidate_cell_dim(boundaries: DataFrame, res: int) -> DataFrame:
-    """(cell, polys array<struct>) — per-cell polygon candidate subsets for
-    the prefiltered native strategy (and the scaling harness's copy probe)."""
-    return (
-        polygon_cover(boundaries, res)
-        .join(polygon_structs(boundaries), "boundary_id")
-        .groupBy("cell")
-        .agg(F.collect_list("p").alias("polys"))
-    )
-
-
 def clipped_cell_dim(boundaries: DataFrame, res: int) -> DataFrame:
-    """candidate_cell_dim with BOUNDED per-cell geometry: each (cell,
-    polygon) entry carries only the polygon CLIPPED to that cell's window
-    (geo/clip.py), re-expressed as the struct<bid, boxes, edges> shape the
-    native fold consumes. The unclipped dim replicates each polygon's full
-    geometry once per covering cell — O(cells x vertices) broadcast, which
-    is why high-vertex sets forced the prefilter down to res 0 (a res-3
-    dim over the coastline fixture built a >1 GB broadcast); clipped, the
-    total is O(vertices + cells) (every original edge lands in the few
-    cells it crosses, interior cells degenerate to the 4-edge window), so
-    fine resolutions stay broadcast-sized at ANY vertex weight and each
-    point's fold visits only LOCAL edges.
+    """(cell, polys array<struct<bid, boxes, edges>>) with BOUNDED per-cell
+    geometry: each (cell, polygon) entry carries only the polygon CLIPPED
+    to that cell's window (geo/clip.py), in the struct shape the native
+    fold consumes. A per-cell copy of each polygon's full geometry is
+    O(cells x vertices) (a res-3 dim over the coastline fixture built a
+    >1 GB broadcast); clipped, the total is O(vertices + cells) (every
+    original edge lands in the few cells it crosses, interior cells
+    degenerate to the 4-edge window), so fine resolutions stay
+    broadcast-sized at ANY vertex weight and each point's fold visits
+    only LOCAL edges.
 
     The build is a mapInPandas over the polygon DIM — once per snapshot,
     embarrassingly parallel per polygon, the same prepass position as the
@@ -1170,7 +1159,6 @@ def shuffle_pip_join(
     hotness_sample_fraction: float = 0.01,
     clip_cover: bool | str = "auto",
     n_buckets: int | None = None,
-    clip_threshold_edges: float = 2_000_000.0,
 ) -> DataFrame:
     """Shuffle strategy with explicit hot-cell salting.
 
@@ -1243,7 +1231,7 @@ def shuffle_pip_join(
     cover would replicate sum_poly(edges x cover) edge coordinates
     through the shuffle — linear in the _cover_stats sufficient
     statistics, the same decision auto_prefilter makes for clip_dim —
-    and below clip_threshold_edges the zero-extra-Python native cover
+    and at or below REPLICATED_EDGE_LIMIT the zero-extra-Python native cover
     wins outright (a 40-vertex rectangle set replicates ~10^5 doubles:
     clipping that costs a whole extra Spark job to save megabytes,
     measured as the regressed round-6 bench row). Booleans force
@@ -1273,7 +1261,7 @@ def shuffle_pip_join(
         # memoized; _auto_cover_res already paid the stats job
         cover_est, replicated = _replication_estimates(boundaries, res)
         if clip_cover == "auto":
-            clip_cover = replicated > clip_threshold_edges
+            clip_cover = replicated > REPLICATED_EDGE_LIMIT
     pts = points.select(
         "image_id", "lat", "lon",
         cells.hexlite_cell_col(F.col("lat"), F.col("lon"), res).alias("cell"),
@@ -1443,7 +1431,6 @@ def geotag_pip_fused(images: DataFrame, boundaries: DataFrame, index_res: int | 
 
 def tile_assignments(
     points: DataFrame, boundaries: DataFrame, res: int = 9, strategy: str = "broadcast",
-    native_prefilter_res: int | str | None = "auto",
 ) -> DataFrame:
     """The flagship output row (SURVEY.md §7.1 step 3): image x containing
     boundary x tile cell + the boundary's wiki tags.
@@ -1452,31 +1439,18 @@ def tile_assignments(
     strategy: 'broadcast' | 'shuffle' (points = geotagged rows), or
     'fused' (points = the raw images DataFrame; one Python hop total).
 
-    native_prefilter_res: the native strategy's cell-prefilter resolution.
-    Since round 5 the flagship native path DEFAULTS to the cell-prefiltered
-    dim: per-point work drops from O(all polygon edges) to O(cell-candidate
-    edges) — the one-row-dim fold pays every polygon's edges per point,
-    which stopped being competitive once boundaries grew multipolygon/hole
-    rings — and the dim build (polygon_cover) is now native expressions,
-    so the whole plan keeps zero Python (pinned). The DEFAULT is "auto"
-    (round 7): both the resolution and the clipped-vs-unclipped dim come
-    from the auto_prefilter statistics pass, so a user pointing the
-    flagship at an unknown/high-vertex boundary snapshot gets a legal
-    broadcast plan without knowing to ask — the engine-side analogue of
-    Catalyst choosing a join strategy from size statistics. Gate-carrier
-    measurability is preserved by a plan-identity pin: the flagship
-    fixture must keep resolving to (4, unclipped)
+    'native' (points = the raw images DataFrame) parses the geotag header
+    natively and runs broadcast_pip_join_native with its "auto" prefilter;
+    on the unclipped dim the whole plan has zero Python (pinned). The
+    flagship fixture must keep resolving to (4, unclipped)
     (tests/test_round7_hygiene.py), so the bench row's plan cannot drift
-    silently. A fixed int keeps the old behavior; None selects the
-    one-row dim (the plan probes in the scaling harness still measure
-    it).
+    silently.
     """
     if strategy == "fused":
         pairs = geotag_pip_fused(points, boundaries)
     elif strategy == "native":
         # fully-JVM flagship: native binary header parse + native PIP;
         # points = the raw images DataFrame
-        from wikibrain_spark import codecs
         from wikibrain_spark.functions import binparse
 
         pts = points.select(
@@ -1484,9 +1458,7 @@ def tile_assignments(
             binparse.le_double_col(F.col("bytes"), 11).alias("lat"),
             binparse.le_double_col(F.col("bytes"), 19).alias("lon"),
         )
-        pairs = broadcast_pip_join_native(
-            pts, boundaries, cell_prefilter_res=native_prefilter_res
-        )
+        pairs = broadcast_pip_join_native(pts, boundaries)
     else:
         join_fn = broadcast_pip_join if strategy == "broadcast" else shuffle_pip_join
         pairs = join_fn(points, boundaries)  # carries lat/lon: no re-join shuffle

@@ -14,7 +14,7 @@ import os
 from pyspark.sql import SparkSession
 
 
-def fan_out(df, min_partitions: int | None = None):
+def fan_out(df):
     """Round-robin repartition a DataFrame up to the cluster's default
     parallelism IFF it arrives in fewer partitions (round 8, guide §2.6
     idle-capacity). CPU-heavy per-row kernels (regex scrubs, shingle/
@@ -23,8 +23,12 @@ def fan_out(df, min_partitions: int | None = None):
     kernel runs serially while the rest of the cluster idles — and AQE
     cannot help because there is no exchange to re-plan. The guard makes
     this a NO-OP at scale: a table with at least as many splits as cores
-    passes through untouched, so no production shuffle is introduced."""
-    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+    passes through untouched, so no production shuffle is introduced.
+    A streaming frame passes through untouched too: it has no RDD to
+    count partitions of, and each micro-batch is planned on its own."""
+    if df.isStreaming:
+        return df
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
